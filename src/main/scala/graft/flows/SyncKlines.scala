@@ -95,19 +95,24 @@ object SyncKlines {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val adapter = graft.sources.KlineAdapters.registry((exchange, instType))
-      val rows = adapter(raw, exchangeId, instType, ivlMs)
-        .where(col("ts").between(startMs, endMs))
-        // date-partition the fact table: a sync pass rewrites only the days
-        // it touched, not the table (the 100 TB layout lever)
-        .withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd"))
-      UpsertSink.upsert(spark, sinkPath, rows,
-        KeyCols :+ "ts", "ts", partitionCol = Some("dt_date"))
+      load(spark, sinkPath, adapter(raw, exchangeId, instType, ivlMs)
+        .where(col("ts").between(startMs, endMs)))
       if (failed.value > 0)
         org.slf4j.LoggerFactory.getLogger("graft.SyncKlines").warn(
           s"sync pass completed with ${failed.value} failed fetch " +
             "window(s); their ranges remain gaps and re-plan next run")
     } finally raw.unpersist(false)
   }
+
+  /** Keyed merge of normalized klines into a kline table — the one place
+    * that decides the table's layout: keyed on `KeyCols :+ "ts"`, the
+    * newest `ts` wins, and date-partitioned on `dt_date`, so a load
+    * rewrites only the days it touched, not the table (the 100 TB layout
+    * lever). */
+  def load(spark: SparkSession, sinkPath: String, klines: DataFrame): Unit =
+    UpsertSink.upsert(spark, sinkPath,
+      klines.withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd")),
+      KeyCols :+ "ts", "ts", partitionCol = Some("dt_date"))
 
   /** A1: per-key watermark over the sink (one job for all keys). */
   def watermarks(spark: SparkSession, sinkPath: String): DataFrame =

@@ -85,11 +85,10 @@ object GapEngine {
   def gapPlan(df: DataFrame, allKeys: DataFrame, keys: Seq[String],
       tsCol: String, ivlMs: Long, startMs: Long, endMs: Long,
       mergeWithinMs: Long): DataFrame = {
-    val interior = interiorGaps(
-      df.where(col(tsCol).between(startMs, endMs)), keys, tsCol, ivlMs)
-    val boundary = boundaryGaps(
-      df.where(col(tsCol).between(startMs, endMs)), allKeys, keys, tsCol,
-      ivlMs, startMs, endMs)
+    val inRange = df.where(col(tsCol).between(startMs, endMs))
+    val interior = interiorGaps(inRange, keys, tsCol, ivlMs)
+    val boundary = boundaryGaps(inRange, allKeys, keys, tsCol, ivlMs,
+      startMs, endMs)
     mergeRanges(interior.unionByName(boundary), keys, mergeWithinMs)
   }
 

@@ -45,16 +45,6 @@ object Components {
   def connectedComponents(nodes: DataFrame, idCol: String, edges: DataFrame,
       aCol: String, bCol: String, maxIters: Int = 20): DataFrame = {
     val spark = nodes.sparkSession
-    // profiling-only stage timer (SPARK_GRAFT_CC_VERBOSE=1); zero jobs added
-    // when off
-    val verbose = sys.env.get("SPARK_GRAFT_CC_VERBOSE").contains("1")
-    def vt[T](name: String)(f: => T): T =
-      if (!verbose) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"CC $name%-12s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
     // Lineage-truncating extraction of a two-long-column frame. NOT
     // Dataset.rdd: that plans a SEPARATE deserializing query execution
     // whose row encoder is Janino-compiled on every call (measured 0.6+ s
@@ -120,12 +110,11 @@ object Components {
       // DECREASE, so the fixpoint check is a plain sum compare — no join
       // against the previous round. Decimal: a 100 TB node set's label sum
       // overflows a long.
-      val (n, initSum) = vt("active") {
-        val r = active.agg(count(lit(1)),
-          sum(col("sid").cast("decimal(38,0)"))).head
-        (r.getLong(0),
-          Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
-      }
+      val stats = active.agg(count(lit(1)),
+        sum(col("sid").cast("decimal(38,0)"))).head
+      val n = stats.getLong(0)
+      val initSum =
+        Option(stats.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO)
       val parts = spark.sparkContext.defaultParallelism.max(1)
       val p = new HashPartitioner(parts)
       val sidRdd = active.select(col("sid")).queryExecution.toRdd
@@ -138,7 +127,7 @@ object Components {
         .flatMap(kv => Iterator((kv._1, kv._2), (kv._2, kv._1)))
         .union(sidRdd.map(s => (s, s)))
         .partitionBy(p).persist()
-      vt("edges")(edgesK.count())
+      edgesK.count() // fill the pinned edges before their input is freed
       pairs.unpersist(false)
       labels = sidRdd.map(s => (s, s)).partitionBy(p).persist()
       def bigSum(r: RDD[(Long, Long)]): java.math.BigDecimal =
@@ -161,7 +150,7 @@ object Components {
         val hopped = red.map { case (id, lbl) => (lbl, id) }.join(red, p)
           .map { case (_, (id, lbl2)) => (id, lbl2) }
           .partitionBy(p).persist()
-        val newSum = vt(s"round $it")(bigSum(hopped))
+        val newSum = bigSum(hopped)
         labels.unpersist(false)
         labels = hopped
         converged = newSum.compareTo(prevSum) == 0

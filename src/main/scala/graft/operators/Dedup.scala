@@ -328,13 +328,13 @@ object Dedup {
   /** Bucket count for the tagged index's on-disk partitioning. A constant
     * (not data-scale): partition directories stay enumerable, and the
     * driver-side pruning in-lists in [[admitBatch]] are bounded by it.
-    * A DEPLOY-TIME knob with a MEASURED curve (`Scratch bcurve`, r15):
+    * A DEPLOY-TIME knob with a MEASURED curve (README's r15 B table):
     * dirs touched per probe ≈ B·(1−(1−1/B)^bandKeys), so pruning engages
     * only when B ≫ the batch's band-key count — a 32-doc batch (128
     * band keys) saturates B=8 (8/8 dirs) and nearly saturates B=64
     * (52/64, 19% pruned) while appending 6× the files (~30 ms/file of
     * commit overhead), a net loss at fixture batch sizes. The TRICKLE
-    * regime is MEASURED too (`Scratch bcurvet`, r16, ×16 index): a 1-doc
+    * regime is MEASURED too (README's r16 table, ×16 index): a 1-doc
     * batch (4 band keys) touches 4 dirs at EVERY B — 4/8, 4/64, 4/256,
     * the formula's touched ≪ B side — and appends only its own band-key
     * count of files at any B (the append side never punishes trickle
@@ -452,14 +452,9 @@ object Dedup {
       textCol: String, indexPath: String, sinkPath: String, k: Int,
       bands: Int, shingleK: Int, threshold: Double,
       epoch: Long = 0L, idxBuckets: Long = IndexBuckets): DataFrame = {
-    val debug = sys.env.contains("SPARK_GRAFT_P16_DEBUG")
-    val t0 = System.nanoTime()
     val plan = admissionStatePlan(batch, idCol, textCol, k, bands,
       shingleK, idxBuckets)
     val stateRows = plan.collect()
-    if (debug)
-      println(f"ADMITDEBUG batch=$batchId ${"collect1"}%-14s " +
-        f"${(System.nanoTime() - t0) / 1e9}%6.2f s")
     admitFromState(batch.sparkSession, stateRows.toSeq, plan.schema,
       batchId, indexPath, sinkPath, threshold, epoch, idxBuckets)
   }
@@ -544,13 +539,6 @@ object Dedup {
         s"epoch >= 0 (got epoch=$epoch, batchId=$batchId); roll the epoch " +
         "before a lifecycle reaches 1e6 micro-batches")
     val tag = epoch * 1000000L + batchId
-    val debug = sys.env.contains("SPARK_GRAFT_P16_DEBUG")
-    var tPrev = System.nanoTime()
-    def mark(what: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"ADMITDEBUG batch=$batchId $what%-14s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     // The state rows are batch-sized by the admission contract (the same
     // rows broadcast into every candidate/verify join below), so holding
     // them as LocalRelations is the driver footprint the broadcasts
@@ -591,8 +579,8 @@ object Dedup {
     // The index reads PARTITION-PRUNE (the r13 verdict-item-2 layout): the
     // bands scan to the delta's own band-buckets, the toks scan to the
     // candidates' id-buckets — each driver in-list is bounded by
-    // IndexBuckets (a constant), never by data (`Scratch w16prune`
-    // measures probe wall ~flat as the index grows ×16). Candidates
+    // IndexBuckets (a constant), never by data (recorded at sf0.1: steady
+    // admit wall 4.60 → 4.37 s with the index grown ×16). Candidates
     // persist batch-collision scale and feed the O(B) collect + the
     // verify.
     val dBandBuckets = hashedRows.flatMap(_.getSeq[Long](bktsIdx)).distinct
@@ -606,11 +594,9 @@ object Dedup {
         Seq("band"))
       .where(!col("inb") || col("id") < col("delta_id"))
       .select(col("id"), col("delta_id")).distinct().persist()
-    mark("candAll_plan")
     val candBuckets = candAll
       .select(pmod(xxhash64(col("id")), lit(idxBuckets)).as("bucket"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    mark("collect2")
     // candidate toks: the pruned index fetch for corpus candidates plus
     // the in-memory batch sets for batch-mate candidates
     val toksAll = readBucketPruned(s, s"$indexPath/toks", candBuckets, tag)
@@ -642,7 +628,6 @@ object Dedup {
     val admittedRows = admittedPlan.collect()
     val admittedIds = admittedRows.map(_.get(0)).toSet
     val admitted = local(admittedRows.toSeq, admittedPlan.schema)
-    mark("admit_fill")
     val admittedBandRows = hashedRows.filter(r => admittedIds(r.get(idIdx)))
     val longT = org.apache.spark.sql.types.LongType
     def field(n: String, t: org.apache.spark.sql.types.DataType) =
@@ -687,7 +672,6 @@ object Dedup {
         .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("bucket").parquet(s"$indexPath/toks"))
     SparkJobs.inParallel(appendJobs ++ extraAppends(admitted): _*)
-    mark("appends")
     candAll.unpersist()
     // the admitted-id frame as a LocalRelation: composing callers
     // (pipe16's mix ledger) read it instead of re-listing the sink

@@ -74,14 +74,6 @@ object EpochSpine {
     require(epoch >= 0 && batchId >= 0 && batchId < 1000000L,
       s"epoch-spine tag namespacing requires 0 <= batchId < 1e6 and " +
         s"epoch >= 0 (got epoch=$epoch, batchId=$batchId)")
-    val debug = sys.env.contains("SPARK_GRAFT_P16_DEBUG")
-    val t00 = System.nanoTime()
-    var tPrev = t00
-    def mark(what: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"P16DEBUG batch=$batchId $what%-12s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     val tag = epoch * 1000000L + batchId
     val s = curated.sparkSession
     import s.implicits._
@@ -95,7 +87,6 @@ object EpochSpine {
       .select(col("doc_id"), col("lang"), col("clean"), col("clean_ok"),
         col("words"))
       .localCheckpoint()
-    mark("curate_ckpt")
 
     // 3a. mix-ledger READ, fired BEFORE the admission phase as a
     // concurrent driver job (r14 verdict item 3 — per-batch job walls
@@ -138,7 +129,6 @@ object EpochSpine {
     val stateRows = try statePlan.collect().toSeq catch {
       case e: Throwable => settleLedger(usedMapF, e); throw e
     }
-    mark("decon_admit_state")
     val sch = statePlan.schema
     val idIdx = sch.fieldIndex("id")
     val langIdx = sch.fieldIndex("lang")
@@ -208,7 +198,6 @@ object EpochSpine {
     } catch {
       case e: Throwable => settleLedger(usedMapF, e); throw e
     }
-    mark("admit_mix_census")
     // admitted/deconOk/mixCand/mixed are LocalRelations (nothing cached);
     // batch is a localCheckpoint — its blocks are released by the
     // ContextCleaner when the frame goes out of scope

@@ -71,13 +71,6 @@ object MediaSpine {
       s"media-spine tag namespacing requires 0 <= batchId < 1e6 and " +
         s"epoch >= 0 (got epoch=$epoch, batchId=$batchId)")
     val tag = epoch * 1000000L + batchId
-    val debug = sys.env.contains("SPARK_GRAFT_P16_DEBUG")
-    var tPrev = System.nanoTime()
-    def mark(what: String): Unit = if (debug) {
-      val now = System.nanoTime()
-      println(f"M7DEBUG batch=$batchId $what%-12s ${(now - tPrev) / 1e9}%6.2f s")
-      tPrev = now
-    }
     val s = batch.sparkSession
     // persist (NOT localCheckpoint — r15 verdict item 4, the serial-chain
     // shave): meta's plan is a shallow projection over the drop-file scan,
@@ -100,7 +93,6 @@ object MediaSpine {
     // fills meta's cache, so every later consumer reads cached rows.
     val batchSpps = meta.select(col("spp")).distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    mark("meta_spps")
     val w = Window.partitionBy(col("sha")).orderBy(col("id"))
     val inBatchWinners = meta.withColumn("_rn", row_number().over(w))
       .where(col("_rn") === 1).drop("_rn")
@@ -114,7 +106,6 @@ object MediaSpine {
         .select(col("sha"))
       inBatchWinners.join(stored, Seq("sha"), "left_anti")
     } else inBatchWinners).persist()
-    mark("exact_gate")
 
     // 2. near-dup gate on the deterministic features (w20's rule). The
     // probe rows COLLECT in one job (batch × nprobe rows — broadcast
@@ -135,7 +126,6 @@ object MediaSpine {
     val probedCells = probesRows
       .map(_.getLong(probesPlan.schema.fieldIndex("cell")))
       .distinct.toSeq.sorted
-    mark("features")
     val storage = probes.where(col("probe_rank") === 1)
       .select(col("id"), col("v"), col("nrm"), col("cell"))
     // no distinct() on either rejection arm (or their union): they feed
@@ -162,7 +152,6 @@ object MediaSpine {
       .join(inbRejected.unionByName(idxMatched), Seq("id"), "left_anti")
     val admitted = s.createDataFrame(
       admittedPlan.collect().toSeq.asJava, admittedPlan.schema)
-    mark("vec_gate")
 
     // 3. the three appends as CONCURRENT Spark jobs (disjoint outputs,
     // materialized inputs — the admitBatch r15 discipline); replay is
@@ -208,7 +197,6 @@ object MediaSpine {
         .partitionBy("cell").parquet(s"$vecIdxPath/vecs"),
       () => funnelDelta.unionByName(admitDelta).unionByName(shardDelta)
         .coalesce(1).write.mode(SaveMode.Append).parquet(censusPath))
-    mark("appends")
     exactFresh.unpersist()
     meta.unpersist() // persisted above — a long stream must not accrete
   }

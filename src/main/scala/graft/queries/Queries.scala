@@ -161,7 +161,7 @@ object Queries {
     p
   }
 
-  /** Bench-run isolation for the streaming admission queries: copy a
+  /** Repeated-run isolation for the streaming admission queries: copy a
     * STAGED base store into per-run scratch so stream appends never leak
     * across runs (the staged tree is read-only; a file copy is cheap
     * against re-hashing/re-assigning the base corpus). One helper for the
@@ -5364,10 +5364,8 @@ object Queries {
           (ts + lit(hourMs - 1)).cast("string"),
           lit(",\"750.0\",42,\"1\",\"1\",\"0\"]"))), ","),
         lit("]")).as("body"))
-    val seed = graft.sources.KlineAdapters.binance(bodies, 9, 1, hourMs)
-      .withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd"))
-    graft.sinks.UpsertSink.upsert(s, sink, seed,
-      SyncKlines.KeyCols :+ "ts", "ts", Some("dt_date"))
+    SyncKlines.load(s, sink,
+      graft.sources.KlineAdapters.binance(bodies, 9, 1, hourMs))
     // seeded counts from the SOURCE grid (hours is already distinct), not
     // a lazy read of the sink: the upsert below swaps the sink's files,
     // and a pre-run listing evaluated post-run would read dead paths

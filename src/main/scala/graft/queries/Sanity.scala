@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SparkEntry, Tables}
 import QuerySpec._
 
 /** DEGENERACY CENSUS over the funnel-shaped queries — the r13 pipe15
@@ -25,13 +25,14 @@ import QuerySpec._
   * query's public output only — no parallel re-implementation that could
   * drift from the real plan.
   *
-  * Run via `Scratch sanity [query...]` at BOTH sf0.01 and sf0.1 each
-  * round (the incident class is scale-dependent: 3-gram decon retention
-  * is a plausible 24% at sf0.01 and a degenerate 0.2% at sf0.1). The
-  * detector itself is regression-tested: SanitySpec re-introduces the
-  * 3-gram grain through [[Queries.pipe15EpochSpineAt]] and asserts the
-  * pipe15 check flags it (and `Scratch sanity3g` does the same at the
-  * current SF dir).
+  * Run via [[main]] at BOTH sf0.01 and sf0.1 (the incident class is
+  * scale-dependent: 3-gram decon retention is a plausible 24% at sf0.01
+  * and a degenerate 0.2% at sf0.1). The detector itself is
+  * regression-tested: SanitySpec re-introduces a degenerate grain through
+  * [[Queries.pipe15EpochSpineAt]] and asserts the pipe15 check flags it;
+  * the 3-gram grain at sf0.1 was recorded flagged with 8 violations
+  * (emptied 4_decon rows ×5 langs, 0/1782 retention, dead mix, 0/8
+  * shards).
   */
 object Sanity {
   type Check = (SparkSession, String) => Seq[String]
@@ -428,9 +429,8 @@ object Sanity {
     val sel = checks.filter { case (n, _) => only.isEmpty || only(n) }
     var bad = 0
     // a filter name that matches NO check is a FAILED check, never a
-    // silent shrink of the census: `Scratch sanity <typo>` used to print
-    // "0/0 checks ok" and exit 0 (the r15 judge hit it live) — a typo'd
-    // filter or a renamed check must fail the gate loudly
+    // silent shrink of the census to "0/0 checks ok": a typo'd filter or
+    // a renamed check must fail the gate loudly
     val unknown = (only -- checks.map(_._1).toSet).toSeq.sorted
     val unknownResults = unknown.map { n =>
       bad += 1
@@ -470,5 +470,26 @@ object Sanity {
       println(s"SANITY census written to $out")
     }
     bad
+  }
+
+  /** Census arguments: a directory-looking argument selects the sf dir
+    * (the last one wins); every other argument is a check-name filter. */
+  def splitArgs(args: Seq[String]): (Option[String], Set[String]) = {
+    val (dirs, filters) = args.partition(a =>
+      a.contains("/") || new java.io.File(a).isDirectory)
+    (dirs.lastOption, filters.toSet)
+  }
+
+  /** `Sanity <sfDir> [checkName …]`: runs the census; exits non-zero on
+    * any failed check. */
+  def main(args: Array[String]): Unit = {
+    val (dir, only) = splitArgs(args.toSeq)
+    val sfDir = dir.getOrElse {
+      System.err.println("usage: Sanity <sfDir> [checkName ...]")
+      sys.exit(2)
+    }
+    val spark = SparkEntry.localSession()
+    val bad = try run(spark, sfDir, only) finally spark.stop()
+    if (bad > 0) sys.exit(1)
   }
 }

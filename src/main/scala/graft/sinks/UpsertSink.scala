@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,10 +42,11 @@ object UpsertSink {
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
+  /** The table root's entries; empty when there is no table. */
+  private def rootListing(spark: SparkSession, path: String): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = fsFor(spark, path)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
+    if (fs.exists(p)) fs.listStatus(p).toSeq else Nil
   }
 
   /** Detect and resolve leftovers of a crashed swap before any read of the
@@ -148,17 +149,33 @@ object UpsertSink {
 
   /** Full-row upsert keyed on `keys`: rows in `updates` replace stored rows
     * with the same key (within a batch, the highest `versionCol` wins;
-    * stored rows lose to any update). */
+    * stored rows lose to any update).
+    *
+    * `partitionCol` lays out a NEW table. An existing table keeps its own
+    * layout, read from its root listing: a caller that omits the column
+    * (a repair merging into a partitioned kline sink) still writes
+    * partition by partition. Whole-table rewriting a partitioned table
+    * would leave a flat file that reads ignore once the next partitioned
+    * write lands beside it. A caller naming a different column, or an
+    * update lacking the stored one, fails before anything is written. */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], versionCol: String,
       partitionCol: Option[String] = None): Unit = {
     if (updates.isEmpty) return
     recoverCrash(spark, path)
-    if (!exists(spark, path)) {
+    val root = rootListing(spark, path)
+    if (root.isEmpty) {
       val w = updates.write.mode(SaveMode.Overwrite)
       partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
       return
     }
+    val storedCol = root.filter(_.isDirectory).map(_.getPath.getName)
+      .find(_.contains("=")).map(_.takeWhile(_ != '='))
+    require(partitionCol.forall(storedCol.contains),
+      s"upsert into $path names partition column ${partitionCol.get}; " +
+        s"the table's is ${storedCol.getOrElse("none")}")
+    storedCol.foreach(c => require(updates.columns.contains(c),
+      s"upsert into $path: the update lacks partition column $c"))
     val stored = spark.read.parquet(path)
     val cols = updates.columns
     def merge(oldPart: DataFrame): DataFrame = {
@@ -172,7 +189,7 @@ object UpsertSink {
         .where(col("_rn") === 1)
         .drop("_pri", "_rn")
     }
-    partitionCol match {
+    storedCol match {
       case Some(c) =>
         // read + merge + rewrite ONLY the touched partitions; everything
         // else stays on disk untouched (no read, no shuffle, no rewrite).
@@ -217,7 +234,7 @@ object UpsertSink {
       .withColumn("_urn", row_number().over(ww))
       .where(col("_urn") === 1)
       .drop("_urn")
-    if (!exists(spark, path)) {
+    if (rootListing(spark, path).isEmpty) {
       batch.write.mode(SaveMode.Overwrite).parquet(path)
       return
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 
-import graft.sinks.UpsertSink
+import graft.flows.SyncKlines
 
 /** Structured-Streaming shell for the reference's scheduler-driven flows
   * (SURVEY §2.9). The reference is micro-batch by scheduler (Prefect cron /
@@ -32,7 +32,6 @@ object KlineStream {
     case "onchain" | "macro"          => Trigger.ProcessingTime("30 seconds")
     case "kalshi"                     => Trigger.ProcessingTime("60 seconds")
     case "ratio_5m"                   => Trigger.ProcessingTime("5 minutes")
-    case "klines_1m" | "cex_inflow" | "symbols" => Trigger.AvailableNow()
     case _                            => Trigger.AvailableNow()
   }
 
@@ -55,6 +54,15 @@ object KlineStream {
       .map(s => (wallMs: Long) => s.onCalendar(wallMs))
       .getOrElse((_: Long) => true)
 
+  /** A drop directory's raw response files as a stream of
+    * `(symbol, body)` rows, one per `symbol TAB body` line. */
+  private def dropFiles(spark: SparkSession, dropDir: String): DataFrame = {
+    // limit=2: a tab inside the body must not truncate it
+    val parts = split(col("value"), "\t", 2)
+    spark.readStream.format("text").load(dropDir)
+      .select(parts.getItem(0).as("symbol"), parts.getItem(1).as("body"))
+  }
+
   /** Micro-batch kline ingest: watch a drop directory of raw response files
     * `(symbol TAB body)` — the landing zone a fetcher writes — normalize
     * through the exchange adapter, and MERGE each micro-batch into the keyed
@@ -63,23 +71,13 @@ object KlineStream {
       sinkPath: String, exchange: String, exchangeId: Int, instType: Int,
       ivlMs: Long, trigger: Trigger): StreamingQuery = {
     val adapter = graft.sources.KlineAdapters.registry((exchange, instType))
-    val raw = spark.readStream
-      .format("text")
-      .load(dropDir)
-      .select(
-        // limit=2: a tab inside the body must not truncate it
-        split(col("value"), "\t", 2).getItem(0).as("symbol"),
-        split(col("value"), "\t", 2).getItem(1).as("body"))
-    raw.writeStream
+    dropFiles(spark, dropDir).writeStream
       .queryName(s"kline-ingest-$exchange-$instType")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = adapter(batch, exchangeId, instType, ivlMs)
-          .withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd"))
-        UpsertSink.upsert(batch.sparkSession, sinkPath, rows,
-          Seq("exchange_id", "inst_type", "symbol", "ts"), "ts",
-          partitionCol = Some("dt_date"))
+        SyncKlines.load(batch.sparkSession, sinkPath,
+          adapter(batch, exchangeId, instType, ivlMs))
       }
       .start()
   }
@@ -138,13 +136,9 @@ object KlineStream {
       lateness: String, trigger: Trigger): StreamingQuery = {
     import org.apache.spark.sql.functions._
     val adapter = graft.sources.KlineAdapters.registry((exchange, instType))
-    val raw = spark.readStream.format("text").load(dropDir)
-      .select(
-        // limit=2: a tab inside the body must not truncate it
-        split(col("value"), "\t", 2).getItem(0).as("symbol"),
-        split(col("value"), "\t", 2).getItem(1).as("body"))
     // adapters are pure column maps, so they lift to streaming DataFrames
-    val klines = adapter(raw, exchangeId, instType, ivlMs)
+    val klines = adapter(dropFiles(spark, dropDir), exchangeId, instType,
+      ivlMs)
     windowedStats(spark, klines, windowSpec, lateness)
       .writeStream
       .queryName(s"kline-window-$exchange")

@@ -57,6 +57,35 @@ class IntegrityAndMacroSpec extends SparkSpec {
     assert(CheckIntegrity.deficientHours(st2).count() == 0)
   }
 
+  test("repairFromArchive keeps a dt_date-partitioned sink partitioned") {
+    val sink = Files.createTempDirectory("integ").toString + "/klines"
+    val day = "2024-01-01"
+    // hour0 full, hour1 empty, stored the way SyncKlines.run lays it out
+    val facts = Seq(("A", T0 + 1, 1.0, day), ("A", T0 + 2, 2.0, day),
+      ("A", T0 + 3, 3.0, day)).toDF("sym", "ts", "v", "dt_date")
+    graft.sinks.UpsertSink.upsert(spark, sink, facts, Seq("sym", "ts"), "ts",
+      partitionCol = Some("dt_date"))
+    val deficient = CheckIntegrity.deficientHours(CheckIntegrity.hourlyStatus(
+      spark.read.parquet(sink), Seq("A").toDF("sym"), Seq("sym"), "ts",
+      T0, T0 + 2 * H, expectedPerHour = 3))
+    val archive = Seq(("A", T0 + H + 7, 7.0, day), ("A", T0 + H + 8, 8.0, day),
+      ("A", T0 + H + 9, 9.0, day)).toDF("sym", "ts", "v", "dt_date")
+    CheckIntegrity.repairFromArchive(spark, sink, archive, deficient,
+      Seq("sym"), "ts")
+    // the next pass touches a different day only
+    val nextDay = Seq(("A", T0 + 24 * H, 10.0, "2024-01-02"))
+      .toDF("sym", "ts", "v", "dt_date")
+    graft.sinks.UpsertSink.upsert(spark, sink, nextDay, Seq("sym", "ts"),
+      "ts", partitionCol = Some("dt_date"))
+    val after = spark.read.parquet(sink).select("ts").as[Long].collect()
+    assert(after.sorted.toList == List(T0 + 1, T0 + 2, T0 + 3, T0 + H + 7,
+      T0 + H + 8, T0 + H + 9, T0 + 24 * H))
+    val root = new java.io.File(sink)
+    assert(root.list().filter(_.startsWith("dt_date=")).sorted.toList ==
+      List("dt_date=2024-01-01", "dt_date=2024-01-02"))
+    assert(!root.list().exists(_.endsWith(".parquet")), "flat part files")
+  }
+
   test("repairFromArchive verifies sha256 digests; corrupt rows never reach the sink") {
     val sink = Files.createTempDirectory("integ").toString + "/facts"
     def sha(s: String): String = java.security.MessageDigest

@@ -6,8 +6,8 @@ import graft.SparkSpec
   * verdict-item-1 "test the detector" clause: a detector that never fires
   * is indistinguishable from no detector. The full 3-gram incident needs
   * sf0.1 to reproduce (3-gram retention is a plausible 24% at sf0.01 and
-  * only saturates at sf0.1) — that end-to-end path is `Scratch sanity3g`,
-  * run per round; in-suite we pin (a) the healthy spine passes, (b) a
+  * only saturates at sf0.1; recorded there as 8 violations, 0/1782 decon
+  * retention); in-suite we pin (a) the healthy spine passes, (b) a
   * degenerate GRAIN is flagged end-to-end at spec scale (1-gram saturates
   * at ANY sf), and (c) each violation class fires on synthetic rows. */
 class SanitySpec extends SparkSpec {
@@ -37,6 +37,11 @@ class SanitySpec extends SparkSpec {
     // half of the intent silently vanishing is the same footgun
     assert(Sanity.run(spark, "/root/testdata/sf0.001",
       Set("pipe15_epoch_spine_typo", "w16_stream_admission_typo")) === 2)
+    // the command line: a directory-looking argument selects the sf dir
+    // and never counts as a filter (else the census shrinks to 0 checks)
+    val (dir, only) = Sanity.splitArgs(Seq("testdata/sf0.001", "no_such_check"))
+    assert(dir === Some("testdata/sf0.001"))
+    assert(only === Set("no_such_check"))
   }
 
   test("each violation class fires on synthetic funnel rows") {

@@ -68,6 +68,31 @@ class UpsertSinkSpec extends SparkSpec {
     assert(out.toList == List(("BTC", 1L, 1.0), ("BTC", 2L, 22.0)))
   }
 
+  test("an upsert that mismatches the stored partition layout fails before writing") {
+    def table(p: String) = spark.read.parquet(p)
+      .select("symbol", "ts", "close").as[(String, Long, Double)]
+      .collect().sortBy(_._2).toList
+    val v1 = Seq(("BTC", 1L, 1.0, "2024-01-01"), ("BTC", 2L, 2.0, "2024-01-02"))
+      .toDF("symbol", "ts", "close", "dt_date")
+    val stored = List(("BTC", 1L, 1.0), ("BTC", 2L, 2.0))
+    val path = tmp()
+    UpsertSink.upsert(spark, path, v1, Seq("symbol", "ts"), "ts", Some("dt_date"))
+    // a different partition column, or an update without the stored one
+    intercept[IllegalArgumentException](UpsertSink.upsert(spark, path,
+      Seq(("BTC", 3L, 3.0, "2024-01-03")).toDF("symbol", "ts", "close", "day"),
+      Seq("symbol", "ts"), "ts", Some("day")))
+    intercept[IllegalArgumentException](UpsertSink.upsert(spark, path,
+      Seq(("BTC", 3L, 3.0)).toDF("symbol", "ts", "close"),
+      Seq("symbol", "ts"), "ts"))
+    assert(table(path) == stored)
+    // a flat table is never partitioned beside its root files
+    val flat = tmp()
+    UpsertSink.upsert(spark, flat, v1, Seq("symbol", "ts"), "ts")
+    intercept[IllegalArgumentException](UpsertSink.upsert(spark, flat, v1,
+      Seq("symbol", "ts"), "ts", Some("dt_date")))
+    assert(table(flat) == stored)
+  }
+
   test("append skips empty batches (K3)") {
     val path = tmp()
     UpsertSink.append(spark, path,
