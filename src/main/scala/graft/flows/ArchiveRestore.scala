@@ -169,7 +169,9 @@ object ArchiveRestore {
 
   /** The reference's full per-hour restore: verify → extract → locate →
     * range-read → repair-merge for deficient hours only. Returns the
-    * restored-and-filtered frame (what the reference stream-loads). */
+    * restored-and-filtered frame (what the reference stream-loads). A
+    * `dt_date`-partitioned sink gets the slice with that column derived
+    * from `dt` ([[SyncKlines.withDay]]), so it stays partitioned. */
   def restoreHour(spark: SparkSession, tar: File, sidecar: File,
       workDir: File, sinkPath: String, symbol: String, exchangeId: Int,
       instType: Int, hourStartMs: Long): DataFrame = {
@@ -191,7 +193,10 @@ object ArchiveRestore {
         col("inst_type") === instType &&
         col("dt") >= timestamp_millis(lit(hourStartMs)) &&
         col("dt") < timestamp_millis(lit(hourEnd)))
-    graft.sinks.UpsertSink.upsert(spark, sinkPath, slice,
+    // a sink laid out like the kline tables takes the slice in that layout
+    val layout = graft.sinks.UpsertSink.partitionColumn(spark, sinkPath)
+    graft.sinks.UpsertSink.upsert(spark, sinkPath,
+      if (layout.contains("dt_date")) SyncKlines.withDay(slice) else slice,
       Seq("symbol", "exchange_id", "inst_type", "ts"), "ts")
     slice
   }

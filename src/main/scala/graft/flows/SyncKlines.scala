@@ -14,17 +14,18 @@ import graft.sinks.UpsertSink
   *   per-batch Stream Load — O(symbols) scheduler round-trips.
   *
   * here:
-  *   1. active symbol dim (J1)                        — one broadcast join
-  *   2. sink extents per key (A1 generalized)         — one groupBy
-  *   3. gap plan W1∪W2→W3 for EVERY key              — one windowed job
-  *   4. fetch windows (S3 pagination, `explode(sequence)`) — map-side
-  *   5. fetch: injected `(key, window) → raw body` — in production a
+  *   1. active symbol dim (J1)                        — marker rows
+  *   2. gap plan W1∪W2→W3 for EVERY key, from the sink's `(keys, ts)` rows
+  *      — one shuffle by key, one sorted scan per key ([[GapEngine.gapPlan]])
+  *   3. fetch windows (S3 pagination, `explode(sequence)`) — map-side
+  *   4. fetch: injected `(key, window) → raw body` — in production a
   *      rate-limited REST task per partition (partitioned BY EXCHANGE so one
   *      task owns one exchange's request budget); in tests a fixture lookup
-  *   6. adapter normalization (P1/P2/P4/P5)           — map-side
-  *   7. keyed upsert merge (K1 semantics)             — one shuffle
+  *   5. adapter normalization (P1/P2/P4/P5)           — map-side
+  *   6. keyed upsert merge (K1 semantics)             — one shuffle; the
+  *      upsert evaluates its update once, so each window is fetched once
   *
-  * Scale: stages 3-7 shuffle only on the key/band columns; nothing is
+  * Scale: stages 2-6 shuffle only on the key/band columns; nothing is
   * collected to the driver; symbol count raises parallelism, not rounds.
   */
 object SyncKlines {
@@ -89,19 +90,18 @@ object SyncKlines {
         }
       }
       .toDF("symbol", "body")
-      // pin the responses: the sink's empty-skip probe and the write are two
-      // actions over this subtree, and lineage re-execution must not hit the
-      // exchange twice per window (fetches are paid, rate-limited work)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val adapter = graft.sources.KlineAdapters.registry((exchange, instType))
-      load(spark, sinkPath, adapter(raw, exchangeId, instType, ivlMs)
-        .where(col("ts").between(startMs, endMs)))
-      if (failed.value > 0)
-        org.slf4j.LoggerFactory.getLogger("graft.SyncKlines").warn(
-          s"sync pass completed with ${failed.value} failed fetch " +
-            "window(s); their ranges remain gaps and re-plan next run")
-    } finally raw.unpersist(false)
+    // fetches are paid, rate-limited work: the upsert evaluates its update
+    // once, so each window is fetched once. The range is a closure value,
+    // not a literal Spark would write into generated code, so every pass
+    // reuses the same compiled classes (as in GapEngine.gapPlan).
+    val inRange = udf((ts: Long) => ts >= startMs && ts <= endMs)
+    val adapter = graft.sources.KlineAdapters.registry((exchange, instType))
+    load(spark, sinkPath, adapter(raw, exchangeId, instType, ivlMs)
+      .where(inRange(col("ts"))))
+    if (failed.value > 0)
+      org.slf4j.LoggerFactory.getLogger("graft.SyncKlines").warn(
+        s"sync pass completed with ${failed.value} failed fetch " +
+          "window(s); their ranges remain gaps and re-plan next run")
   }
 
   /** Keyed merge of normalized klines into a kline table — the one place
@@ -110,9 +110,12 @@ object SyncKlines {
     * rewrites only the days it touched, not the table (the 100 TB layout
     * lever). */
   def load(spark: SparkSession, sinkPath: String, klines: DataFrame): Unit =
-    UpsertSink.upsert(spark, sinkPath,
-      klines.withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd")),
-      KeyCols :+ "ts", "ts", partitionCol = Some("dt_date"))
+    UpsertSink.upsert(spark, sinkPath, withDay(klines), KeyCols :+ "ts", "ts",
+      partitionCol = Some("dt_date"))
+
+  /** The kline layout's partition column: `dt_date`, the UTC day of `dt`. */
+  def withDay(df: DataFrame): DataFrame =
+    df.withColumn("dt_date", date_format(col("dt"), "yyyy-MM-dd"))
 
   /** A1: per-key watermark over the sink (one job for all keys). */
   def watermarks(spark: SparkSession, sinkPath: String): DataFrame =

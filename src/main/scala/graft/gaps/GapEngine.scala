@@ -1,8 +1,9 @@
 package graft.gaps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The gap-fill engine — the reference's signature query family, restated as
   * set-oriented DataFrame transforms.
@@ -15,11 +16,15 @@ import org.apache.spark.sql.functions._
   *  - W3 `:227-245` — coalesce adjacent gaps closer than `limit*interval` to
   *    cut fetch calls (classic gap-and-islands).
   *
-  * The reference runs W1 once **per symbol** (a SQL round-trip per key); here
-  * one windowed job covers every key: `Window.partitionBy(keys)` shuffles each
-  * key's rows to one task, so the plan is a single exchange + sort per stage
-  * and scales with executors. At 100 TB the only shuffle is by key — no
-  * driver-side loops, no per-key queries.
+  * The reference runs W1 once **per symbol** (a SQL round-trip per key).
+  * Here [[gapPlan]] covers every key with one shuffle: the sink's rows and
+  * the active keys are hash-partitioned by key and sorted, and one scan per
+  * key emits W1 ∪ W2 → W3. The run's bounds (`startMs`, `endMs`, `ivlMs`,
+  * `mergeWithinMs`) are values in the scan's closure, not literals in the
+  * plan, so every pass of an incremental sync runs the same generated code
+  * and hits Spark's codegen cache. No driver-side loops, no per-key
+  * queries. [[interiorGaps]], [[boundaryGaps]] and [[mergeRanges]] are the
+  * same steps as separate windowed transforms (the W1/W2/W3 queries).
   */
 object GapEngine {
 
@@ -81,15 +86,81 @@ object GapEngine {
       .drop("island")
   }
 
-  /** Full pipeline: W1 ∪ W2 → W3. One job for every key. */
+  /** Full pipeline W1 ∪ W2 → W3, equal to
+    * `mergeRanges(interiorGaps ∪ boundaryGaps)` over the rows of `df` in
+    * `[startMs, endMs]`. One shuffle: `df`'s `(keys, ts)` rows and
+    * `allKeys` as marker rows (null ts) are partitioned by key and sorted,
+    * then one scan per key turns its rows into its merged gaps. */
   def gapPlan(df: DataFrame, allKeys: DataFrame, keys: Seq[String],
       tsCol: String, ivlMs: Long, startMs: Long, endMs: Long,
       mergeWithinMs: Long): DataFrame = {
-    val inRange = df.where(col(tsCol).between(startMs, endMs))
-    val interior = interiorGaps(inRange, keys, tsCol, ivlMs)
-    val boundary = boundaryGaps(inRange, allKeys, keys, tsCol, ivlMs,
-      startMs, endMs)
-    mergeRanges(interior.unionByName(boundary), keys, mergeWithinMs)
+    val keyCols = keys.map(col)
+    val rows = df.select(keyCols :+ col(tsCol).cast(LongType).as("_ts") :+
+        lit(false).as("_active"): _*)
+      .unionByName(allKeys.select(keyCols :+
+        lit(null).cast(LongType).as("_ts") :+ lit(true).as("_active"): _*))
+      .repartition(keyCols: _*)
+      .sortWithinPartitions(keyCols :+ col("_ts"): _*)
+    val n = keys.length
+    val out = StructType(rows.schema.fields.take(n) ++
+      Seq(StructField("gap_start", LongType), StructField("gap_end", LongType)))
+    rows.mapPartitions { it =>
+      val in = it.buffered
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val key = in.head
+        // this key's rows; scanKey drains them before the next key is read
+        val run = Iterator.continually(in)
+          .takeWhile(i => i.hasNext && sameKey(i.head, key, n)).map(_.next())
+        scanKey(key, run, n, ivlMs, startMs, endMs, mergeWithinMs)
+          .map { case (s, e) => Row.fromSeq((0 until n).map(key.get) :+ s :+ e) }
+      }
+    }(Encoders.row(out))
+  }
+
+  private def sameKey(a: Row, b: Row, n: Int): Boolean =
+    (0 until n).forall(i => java.util.Objects.deepEquals(a.get(i), b.get(i)))
+
+  /** One key's rows, sorted by ts with marker rows first → its merged gaps.
+    * Row layout: keys (`n` fields), ts (null on a marker), active flag. */
+  private def scanKey(key: Row, run: Iterator[Row], n: Int, ivlMs: Long,
+      startMs: Long, endMs: Long, mergeWithinMs: Long): Iterator[(Long, Long)] = {
+    val gaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var active = false
+    var seen = false
+    var first = 0L
+    var last = 0L
+    run.foreach { r =>
+      if (r.getBoolean(n + 1)) active = true
+      else if (!r.isNullAt(n)) {
+        val ts = r.getLong(n)
+        if (ts >= startMs && ts <= endMs) {
+          // W1: LAG over the in-range rows
+          if (!seen) { first = ts; seen = true }
+          else if (ts - last > ivlMs) gaps += ((last + ivlMs, ts - ivlMs))
+          last = ts
+        }
+      }
+    }
+    if (active) {
+      // W2: a NULL key part never joins the sink's extents, so such a key
+      // gets the whole range, as the equi-join in boundaryGaps gives it
+      val extent = seen && !(0 until n).exists(key.isNullAt)
+      val head = (startMs, if (extent) first - ivlMs else endMs)
+      if ((!extent || first > startMs) && head._1 <= head._2) gaps += head
+      if (extent && last < endMs && last + ivlMs <= endMs)
+        gaps += ((last + ivlMs, endMs))
+    }
+    // W3: a gap opens an island when it starts ≥ mergeWithinMs past the
+    // largest end before it
+    val islands = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    var maxEnd = Long.MinValue
+    gaps.sorted.foreach { case (s, e) =>
+      if (islands.isEmpty || s - maxEnd >= mergeWithinMs) islands += ((s, e))
+      else islands(islands.length - 1) =
+        (islands.last._1, math.max(islands.last._2, e))
+      maxEnd = math.max(maxEnd, e)
+    }
+    islands.iterator
   }
 
   /** Expand merged gap ranges into paginated fetch windows of

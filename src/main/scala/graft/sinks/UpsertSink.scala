@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Idempotent keyed sinks emulating the reference's two stores on plain
   * partitioned parquet (no external table format available in this
@@ -147,6 +148,17 @@ object UpsertSink {
       batch.write.mode(SaveMode.Append).parquet(path)
     }
 
+  /** The partition column of the table at `path` (from its root listing,
+    * after crash recovery), or None for a flat or missing table. */
+  def partitionColumn(spark: SparkSession, path: String): Option[String] = {
+    recoverCrash(spark, path)
+    storedColumn(rootListing(spark, path))
+  }
+
+  private def storedColumn(root: Seq[FileStatus]): Option[String] =
+    root.filter(_.isDirectory).map(_.getPath.getName)
+      .find(_.contains("=")).map(_.takeWhile(_ != '='))
+
   /** Full-row upsert keyed on `keys`: rows in `updates` replace stored rows
     * with the same key (within a batch, the highest `versionCol` wins;
     * stored rows lose to any update).
@@ -157,11 +169,34 @@ object UpsertSink {
     * partition by partition. Whole-table rewriting a partitioned table
     * would leave a flat file that reads ignore once the next partitioned
     * write lands beside it. A caller naming a different column, or an
-    * update lacking the stored one, fails before anything is written. */
+    * update lacking the stored one, fails before anything is written.
+    *
+    * `updates` is evaluated once: it is persisted on entry (unless the
+    * caller already cached it) and every step reads that copy, so a lineage
+    * that calls a paid upstream (the fetches of [[graft.flows.SyncKlines]])
+    * or drains a stream batch runs once per call. An empty update is a
+    * no-op before any layout check. */
   def upsert(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], versionCol: String,
       partitionCol: Option[String] = None): Unit = {
-    if (updates.isEmpty) return
+    val owned = updates.storageLevel == StorageLevel.NONE
+    val batch =
+      if (owned) updates.persist(StorageLevel.MEMORY_AND_DISK) else updates
+    try mergeInto(spark, path, batch, keys, versionCol, partitionCol)
+    finally if (owned) batch.unpersist(false)
+  }
+
+  private def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
+      keys: Seq[String], versionCol: String,
+      partitionCol: Option[String]): Unit = {
+    def touchedBy(c: String): Seq[Any] =
+      updates.select(c).distinct().collect().map(_.get(0)).toSeq
+    // emptiness and the touched partition values in one job, by the column
+    // the table is laid out on; a crashed swap that hides the table's
+    // layout until recovery gets a second probe below
+    val probed = partitionCol.orElse(storedColumn(rootListing(spark, path)))
+      .filter(updates.columns.contains).map(c => c -> touchedBy(c))
+    if (probed.fold(updates.isEmpty)(_._2.isEmpty)) return
     recoverCrash(spark, path)
     val root = rootListing(spark, path)
     if (root.isEmpty) {
@@ -169,8 +204,7 @@ object UpsertSink {
       partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
       return
     }
-    val storedCol = root.filter(_.isDirectory).map(_.getPath.getName)
-      .find(_.contains("=")).map(_.takeWhile(_ != '='))
+    val storedCol = storedColumn(root)
     require(partitionCol.forall(storedCol.contains),
       s"upsert into $path names partition column ${partitionCol.get}; " +
         s"the table's is ${storedCol.getOrElse("none")}")
@@ -193,13 +227,15 @@ object UpsertSink {
       case Some(c) =>
         // read + merge + rewrite ONLY the touched partitions; everything
         // else stays on disk untouched (no read, no shuffle, no rewrite).
-        // Null-safe equality: a NULL partition value lands in the Hive
-        // default-partition dir, whose swap would otherwise drop the stored
-        // rows a plain-equality semi join fails to pull into the merge.
-        val touched = broadcast(
-          updates.select(col(c).as("_touched_p")).distinct())
-        val merged = merge(
-          stored.join(touched, col(c) <=> col("_touched_p"), "left_semi"))
+        // The touched values prune the listing as literals; a NULL value
+        // lives in the Hive default-partition dir, whose swap would
+        // otherwise drop the stored rows an `isin` fails to pull in.
+        val (nulls, values) = probed.collect { case (`c`, vs) => vs }
+          .getOrElse(touchedBy(c)).partition(_ == null)
+        val storedType = stored.schema(c).dataType
+        val hit = col(c).isin(values.map(v => lit(v).cast(storedType)): _*)
+        val merged = merge(stored.where(
+          if (nulls.isEmpty) hit else hit || col(c).isNull))
         val suffix = java.util.UUID.randomUUID().toString.take(8)
         val tmp = path + ".tmp-" + suffix
         // cluster rows by key within each written file: parquet row-group

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, StreamingQuery, Trigger}
 
 import graft.flows.SyncKlines
 
@@ -26,33 +26,14 @@ object KlineStream {
 
   /** Cadence table (deploy.py:49-181) → trigger. Coarse map; the full
     * deployment calendar with second offsets and a start delay that aligns
-    * the first micro-batch lives in [[Schedules.deployments]] /
-    * [[scheduledTrigger]]. */
+    * the first micro-batch lives in [[Schedules.deployments]]
+    * (`Schedule.alignedTrigger`). */
   def triggerFor(flow: String): Trigger = flow match {
     case "onchain" | "macro"          => Trigger.ProcessingTime("30 seconds")
     case "kalshi"                     => Trigger.ProcessingTime("60 seconds")
     case "ratio_5m"                   => Trigger.ProcessingTime("5 minutes")
     case _                            => Trigger.AvailableNow()
   }
-
-  /** Calendar-faithful trigger for a deployed flow: (initial delay to the
-    * next scheduled fire, fixed-rate trigger at the schedule's cadence).
-    * Sleep the delay, then start the query — e.g. sync_klines_1m
-    * (`cron "1 * * * *"`) first fires at minute 1 and then hourly. */
-  def scheduledTrigger(flow: String, nowMs: Long): (Long, Trigger) =
-    Schedules.deployments.get(flow)
-      .map(_.alignedTrigger(nowMs))
-      .getOrElse((0L, triggerFor(flow)))
-
-  /** In-batch calendar gate for a deployed flow. The scheduled trigger's
-    * grid is the gcd of the calendar's fire gaps — it ticks AT every fire
-    * but, for non-uniform calendars (sync_funding_rate: minutes 0,1,5,30),
-    * also in between. Run each micro-batch body behind this gate so
-    * off-calendar ticks make no upstream calls. Undeployed flows pass. */
-  def calendarGate(flow: String): Long => Boolean =
-    Schedules.deployments.get(flow)
-      .map(s => (wallMs: Long) => s.onCalendar(wallMs))
-      .getOrElse((_: Long) => true)
 
   /** A drop directory's raw response files as a stream of
     * `(symbol, body)` rows, one per `symbol TAB body` line. */
@@ -66,7 +47,9 @@ object KlineStream {
   /** Micro-batch kline ingest: watch a drop directory of raw response files
     * `(symbol TAB body)` — the landing zone a fetcher writes — normalize
     * through the exchange adapter, and MERGE each micro-batch into the keyed
-    * sink. Exactly-once-ish: replays of a batch upsert the same keys. */
+    * sink. Exactly-once-ish: replays of a batch upsert the same keys. The
+    * upsert evaluates the batch once, so each micro-batch reads its files
+    * once. */
   def ingest(spark: SparkSession, dropDir: String, checkpointDir: String,
       sinkPath: String, exchange: String, exchangeId: Int, instType: Int,
       ivlMs: Long, trigger: Trigger): StreamingQuery = {
@@ -78,32 +61,6 @@ object KlineStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         SyncKlines.load(batch.sparkSession, sinkPath,
           adapter(batch, exchangeId, instType, ivlMs))
-      }
-      .start()
-  }
-
-  /** Calendar-driven fetch loop — the streaming twin of the reference's
-    * scheduler-fired fetch flows. A rate-source tick stream wakes at the
-    * schedule's gcd grid; the [[calendarGate]] keeps off-calendar ticks from
-    * calling the rate-limited upstream. Gating here is safe where gating a
-    * data stream is not: the ticks carry no payload, so a skipped batch
-    * loses nothing — all work is created by `fetch` on fire instants.
-    * (Contrast [[ingest]], which drains a drop directory and must process
-    * every batch regardless of the calendar.) */
-  def scheduledFetchLoop(spark: SparkSession, flow: String,
-      checkpointDir: String)(fetch: Long => Unit): StreamingQuery = {
-    val gate = calendarGate(flow)
-    val trigger = Schedules.deployments.get(flow)
-      .map(s => Trigger.ProcessingTime(s.periodMs))
-      .getOrElse(triggerFor(flow))
-    spark.readStream.format("rate").option("rowsPerSecond", 1L).load()
-      .writeStream
-      .queryName(s"fetch-$flow")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (_: DataFrame, _: Long) =>
-        val now = System.currentTimeMillis()
-        if (gate(now)) fetch(now)
       }
       .start()
   }
@@ -167,16 +124,5 @@ object KlineStream {
       state.update(Cursor(fresh.map(_.ts).max))
       fresh.sortBy(_.ts).iterator
     } else Iterator.empty
-  }
-
-  /** Wire [[advanceCursor]] over a keyed stream. */
-  def dedupAdvancing(spark: SparkSession, input: DataFrame): DataFrame = {
-    import spark.implicits._
-    input.as[Keyed]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(advanceCursor)
-      .toDF()
   }
 }

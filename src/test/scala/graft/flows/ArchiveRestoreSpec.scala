@@ -139,4 +139,27 @@ class ArchiveRestoreSpec extends SparkSpec {
       "BTCUSDT", 1, 1, hourStart)
     assert(spark.read.parquet(sink).count() == 12)
   }
+
+  test("end-to-end restore into a dt_date-partitioned sink keeps its layout") {
+    val work = Files.createTempDirectory("restorePart").toFile
+    val sink = new File(work, "market_snapshot").toString
+    val full = ArchiveRestore.readSqlite(spark,
+      ArchiveRestore.sqliteFiles(extractDir), "market_snapshot")
+    val hourStart = Base + 3600000L
+    val partial = full.where($"symbol" === "BTCUSDT" &&
+      $"ts" >= hourStart && $"ts" < hourStart + 3600000L).limit(3)
+    graft.sinks.UpsertSink.upsert(spark, sink,
+      partial.withColumn("dt_date", date_format($"dt", "yyyy-MM-dd")),
+      Seq("symbol", "exchange_id", "inst_type", "ts"), "ts", Some("dt_date"))
+
+    ArchiveRestore.restoreHour(spark, tar, sidecar, work, sink, "BTCUSDT",
+      exchangeId = 1, instType = 1, hourStart)
+    val after = spark.read.parquet(sink)
+    assert(after.count() == 12)
+    assert(after.select($"ts").distinct().count() == 12)
+    // still one dir per day, no flat file beside them
+    val root = new File(sink).listFiles().map(_.getName)
+      .filterNot(n => n.startsWith(".") || n.startsWith("_"))
+    assert(root.toSeq == Seq("dt_date=2025-12-16"), root.mkString(","))
+  }
 }

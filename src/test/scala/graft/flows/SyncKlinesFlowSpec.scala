@@ -1,6 +1,7 @@
 package graft.flows
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.gaps.GapEngine
@@ -39,9 +40,18 @@ class SyncKlinesFlowSpec extends SparkSpec {
     assert(gaps.toList == List(
       (Start + 10 * M, Start + 19 * M), (Start + 40 * M, Start + 44 * M)))
 
-    // 3. run the sync flow with the fixture endpoint
+    // 3. run the sync flow with the fixture endpoint: every planned window
+    // is fetched, and fetched once
+    val planned = SyncKlines.fetchPlan(spark, sink, keys, M, Start, End,
+      limit = 5, mergeWithinMs = M)
+      .select($"symbol", $"req_start", $"req_end")
+      .as[(String, Long, Long)].collect().map { case (y, s, e) => s"$y/$s/$e" }
+    fetchHits.clear()
     SyncKlines.run(spark, sink, keys, "binance", 1, 1, M, Start, End,
-      limit = 5, mergeWithinMs = M)(serve)
+      limit = 5, mergeWithinMs = M)(countingServe)
+    assert(planned.length == 3 &&
+      fetchHits.asScala.map { case (w, n) => w -> n.get }.toMap ==
+        planned.map(_ -> 1).toMap)
 
     // 4. re-scan → no gaps; full grid present
     val after = GapEngine.gapPlan(
@@ -58,6 +68,30 @@ class SyncKlinesFlowSpec extends SparkSpec {
     // 6. idempotence: running the flow again changes nothing
     SyncKlines.run(spark, sink, keys, "binance", 1, 1, M, Start, End, 5, M)(serve)
     assert(spark.read.parquet(sink).count() == 60)
+  }
+
+  test("the generated code of the gap plan and of a sync pass does not depend on their bounds") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sink = Files.createTempDirectory("klines").toString + "/codegen"
+    val keys = Seq((1.toShort, 1.toByte, "BTCUSDT"), (1.toShort, 1.toByte, "ETHUSDT"))
+      .toDF("exchange_id", "inst_type", "symbol")
+    SyncKlines.run(spark, sink, keys.limit(1), "binance", 1, 1, M, Start,
+      Start + 29 * M, limit = 5, mergeWithinMs = M)(serve)
+    def plan(endMs: Long): Int = SyncKlines.fetchPlan(spark, sink, keys, M,
+      Start, endMs, limit = 5, mergeWithinMs = M).collect().length
+    assert(plan(End) == 6 + 12) // BTC's tail + ETH's whole hour
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val beforePlan = compiles
+    assert(plan(End + 60 * M) == 18 + 24)
+    assert(compiles == beforePlan)
+    // a whole sync pass, one hour on, runs the same classes too
+    def sync(endMs: Long): Unit = SyncKlines.run(spark, sink, keys, "binance",
+      1, 1, M, Start, endMs, limit = 5, mergeWithinMs = M)(serve)
+    sync(End)
+    val beforePass = compiles
+    sync(End + 60 * M)
+    assert(compiles == beforePass)
+    assert(spark.read.parquet(sink).count() == 2 * 120)
   }
 
   test("retrying fetch seam: every window 500s once, sync still converges") {
@@ -118,6 +152,17 @@ object SyncKlinesFlowSpec {
     (s to e by M).map { ts =>
       s"""[$ts,"100.1","101.2","99.3","100.5","7.5",${ts + M - 1},"750.0",42,"1","1","0"]"""
     }.mkString("[", ",", "]")
+
+  /** Per-window fetch counts of [[countingServe]]. */
+  val fetchHits = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicInteger]()
+
+  /** [[serve]], counting each `symbol/start/end` window it is asked for. */
+  def countingServe(sym: String, s: Long, e: Long): String = {
+    fetchHits.computeIfAbsent(s"$sym/$s/$e",
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    serve(sym, s, e)
+  }
 
   /** Endpoint whose [4,7]-window is permanently down: the retry wrapper
     * exhausts (3 attempts) and raises — SyncKlines must isolate it. */

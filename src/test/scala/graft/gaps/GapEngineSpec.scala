@@ -89,6 +89,54 @@ class GapEngineSpec extends SparkSpec {
     }
   }
 
+  test("property: the scan-based gapPlan = mergeRanges(interiorGaps ∪ boundaryGaps)") {
+    import org.scalacheck.{Gen, Prop}
+    // sink keys a-d, active keys from b-e: "e" is absent from the sink and
+    // "a" is not active; ts spans past both bounds, a few off the grid
+    val genTs = for {
+      slot <- Gen.choose(-5L, 45L)
+      off <- Gen.frequency(9 -> 0L, 1 -> 37L)
+    } yield slot * Ivl + off
+    val genRows = Gen.listOf(Gen.zip(Gen.oneOf("a", "b", "c", "d"), genTs))
+      .map(rs => rs ++ rs.take(1)) // a duplicate ts
+    val genCase = for {
+      rows <- genRows
+      active <- Gen.someOf("b", "c", "d", "e")
+      startSlot <- Gen.choose(0L, 10L)
+      span <- Gen.choose(0L, 30L)
+      merge <- Gen.oneOf(0L, Ivl, 3 * Ivl)
+    } yield (rows, active.toSeq, startSlot * Ivl, (startSlot + span) * Ivl, merge)
+    val params = org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(12)
+      .withInitialSeed(org.scalacheck.rng.Seed(5L))
+    val res = org.scalacheck.Test.check(params, Prop.forAll(genCase) {
+      case (rows, active, start, end, merge) =>
+        val df = present(rows)
+        val keys = active.toDF("k")
+        val inRange = df.where($"ts".between(start, end))
+        val want = GapEngine.mergeRanges(
+          GapEngine.interiorGaps(inRange, Seq("k"), "ts", Ivl).unionByName(
+            GapEngine.boundaryGaps(inRange, keys, Seq("k"), "ts", Ivl, start, end)),
+          Seq("k"), merge)
+        def sorted(d: DataFrame) = d.select("k", "gap_start", "gap_end")
+          .as[(String, Long, Long)].collect().toList.sorted
+        val got = sorted(GapEngine.gapPlan(df, keys, Seq("k"), "ts", Ivl,
+          start, end, merge))
+        Prop(got == sorted(want)) :| s"got $got want ${sorted(want)}"
+    })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("gapPlan: gaps touching each bound, and an in-range duplicate") {
+    val df = present(Seq("a" -> 100L, "a" -> 200L, "a" -> 200L, "a" -> 400L,
+      "b" -> 0L, "b" -> 500L, "c" -> 900L))
+    val keys = Seq("a", "b", "c").toDF("k")
+    val gaps = GapEngine.gapPlan(df, keys, Seq("k"), "ts", Ivl, 0L, 500L, 0L)
+      .as[(String, Long, Long)].collect().toList.sorted
+    assert(gaps == List(("a", 0L, 0L), ("a", 300L, 300L), ("a", 500L, 500L),
+      ("b", 100L, 400L), ("c", 0L, 500L)))
+  }
+
   test("fetchWindows paginates a gap into limit-sized requests") {
     val gaps = Seq(("a", 0L, 950L)).toDF("k", "gap_start", "gap_end")
     val wins = GapEngine.fetchWindows(gaps, Seq("k"), Ivl, 3)

@@ -68,6 +68,30 @@ class UpsertSinkSpec extends SparkSpec {
     assert(out.toList == List(("BTC", 1L, 1.0), ("BTC", 2L, 22.0)))
   }
 
+  test("upsert evaluates each update row once") {
+    val path = tmp()
+    val v1 = Seq(("BTC", 1L, 1.0, "2024-01-01"), ("BTC", 2L, 2.0, "2024-01-02"),
+      ("BTC", 3L, 3.0, "2024-01-03")).toDF("symbol", "ts", "close", "dt_date")
+    UpsertSink.upsert(spark, path, v1, Seq("symbol", "ts"), "ts", Some("dt_date"))
+    // an update whose lineage counts the rows it produces: ts 2..5, one of
+    // them in a day the table does not have yet. The count is a filter, so
+    // no column pruning of a later step can skip it.
+    val evaluated = spark.sparkContext.longAccumulator("update_rows")
+    val counted = udf { (_: Long) => evaluated.add(1); true }.asNondeterministic()
+    val v2 = spark.range(2L, 6L, 1L, 2).where(counted($"id"))
+      .select(lit("BTC").as("symbol"), $"id".as("ts"),
+        ($"id" * 11).cast("double").as("close"),
+        when($"id" < 4, concat(lit("2024-01-0"), $"id".cast("string")))
+          .otherwise(lit("2024-01-04")).as("dt_date"))
+    UpsertSink.upsert(spark, path, v2, Seq("symbol", "ts"), "ts", Some("dt_date"))
+    assert(evaluated.value == 4L)
+    val out = spark.read.parquet(path)
+      .select("symbol", "ts", "close").as[(String, Long, Double)]
+      .collect().sortBy(_._2)
+    assert(out.toList == List(("BTC", 1L, 1.0), ("BTC", 2L, 22.0),
+      ("BTC", 3L, 33.0), ("BTC", 4L, 44.0), ("BTC", 5L, 55.0)))
+  }
+
   test("an upsert that mismatches the stored partition layout fails before writing") {
     def table(p: String) = spark.read.parquet(p)
       .select("symbol", "ts", "close").as[(String, Long, Double)]
