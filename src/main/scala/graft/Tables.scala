@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -18,7 +20,33 @@ object Tables {
     "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Any]), StructType]()
+
+  /** `spark.read.parquet(path)` that infers the schema (one Spark job) only
+    * the first time it sees the path's files: the schema is memoized under
+    * the path, the (name, length, mtime) of its file or of its directory's
+    * entries, and the session's parquet settings, so a rewritten file is
+    * inferred again. For read-only inputs; a table rewritten in place by
+    * every upsert (a sink) reads through its own path. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val files = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
+    val key = (path, files.map(f => (f.getPath.getName, f.getLen,
+      f.getModificationTime)).sortBy(_._1) ++
+      spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted)
+    Option(schemas.get(key)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, df.schema)
+        df
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

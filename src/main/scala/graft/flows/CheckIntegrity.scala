@@ -21,14 +21,18 @@ object CheckIntegrity {
   def hourlyStatus(facts: DataFrame, keys: DataFrame, keyCols: Seq[String],
       tsCol: String, startMs: Long, endMs: Long,
       expectedPerHour: Long): DataFrame = {
+    import facts.sparkSession.implicits._
     val HourMs = 3600000L
+    // the bounds are a closure value and local rows, not literals Spark
+    // would write into generated code, so a read-back one hour on reuses
+    // the same compiled classes (as the range filter of SyncKlines.run)
+    val inRange = udf((ts: Long) => ts >= startMs && ts < endMs)
     val counts = facts
-      .where(col(tsCol).between(startMs, endMs - 1))
+      .where(inRange(col(tsCol)))
       .groupBy((keyCols.map(col) :+
         Align.floorTo(col(tsCol), HourMs).as("hour_ms")): _*)
       .agg(count(lit(1)).as("n"))
-    val hours = facts.sparkSession.range(1).select(explode(sequence(
-      lit(startMs), lit(endMs - HourMs), lit(HourMs))).as("hour_ms"))
+    val hours = (startMs to endMs - HourMs by HourMs).toDF("hour_ms")
     keys.select(keyCols.map(col): _*).distinct()
       .crossJoin(hours)
       .join(counts, keyCols :+ "hour_ms", "left_outer")

@@ -485,16 +485,7 @@ object Similarity {
   def refreshQuantizer(s: org.apache.spark.sql.SparkSession,
       indexPath: String, init: Array[(Long, Array[Double])],
       dim: Int): Array[(Long, Array[Double])] = {
-    val raw = s.read.parquet(s"$indexPath/vecs")
-    // Crash-replay tolerance (the read-side-distinct contract the serving
-    // joins already honor): a replayed micro-batch re-appends byte-equal
-    // rows, and without collapsing them the per-cell mean double-weights
-    // that batch's vectors — the refreshed model would diverge from the
-    // duplicate-free unroll. Only stream-tagged rows can carry replay
-    // duplicates (base builds and rebuilds write Overwrite), so the
-    // distinct shuffles the streamed tail only, never the base plane.
-    val vecs = raw.where(col("batch_id") === -1L)
-      .unionByName(raw.where(col("batch_id") =!= -1L).distinct())
+    val vecs = replayRows(s.read.parquet(s"$indexPath/vecs"))
     val agged = vecs.groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n"),
         (0 until dim).map(i =>
@@ -508,6 +499,19 @@ object Similarity {
         Array.tabulate(dim)(i => r.getDouble(1 + i)))
       .toMap
     init.map { case (id, v) => (id, means.getOrElse(id, v)) }.sortBy(_._1)
+  }
+
+  /** The index rows a refresh or rebuild replays, with crash-replay
+    * duplicates collapsed (the read-side-distinct contract the serving
+    * joins already honor): a replayed micro-batch re-appends byte-equal
+    * rows, which would double-weight that batch's vectors in a per-cell
+    * mean and be carried into the next epoch's index. Base builds and
+    * rebuilds (`batch_id` -1) write Overwrite, so the distinct shuffles
+    * every other row only — a stream tag or a NULL one, which an `=!=`
+    * test would drop. */
+  private def replayRows(vecs: DataFrame): DataFrame = {
+    val base = col("batch_id") <=> lit(-1L)
+    vecs.where(base).unionByName(vecs.where(!base).distinct())
   }
 
   /** Rebuild the cell-partitioned index under a refreshed quantizer: same
@@ -524,13 +528,8 @@ object Similarity {
   def rebuildVecIndex(s: org.apache.spark.sql.SparkSession,
       oldPath: String, newPath: String,
       cents: Array[(Long, Array[Double])]): Unit = {
-    val rows = s.read.parquet(s"$oldPath/vecs")
-      .select(col("id"), col("v"), col("nrm"), col("batch_id"))
-    // collapse crash-replay duplicates (byte-equal re-appended rows) so
-    // they are not carried into the new epoch's index — the
-    // refreshQuantizer rationale; only stream-tagged rows can be replayed
-    val uniq = rows.where(col("batch_id") === -1L)
-      .unionByName(rows.where(col("batch_id") =!= -1L).distinct())
+    val uniq = replayRows(s.read.parquet(s"$oldPath/vecs")
+      .select(col("id"), col("v"), col("nrm"), col("batch_id")))
     assignCells(uniq,
       cents, "id", "v", "id", "v", 1, carry = Seq("nrm", "batch_id"))
       .select(col("id"), col("v"), col("nrm"), col("batch_id"), col("cell"))

@@ -2655,7 +2655,7 @@ object Queries {
     * never perturb them, and they sidestep the round(double) cross-engine
     * divergence class entirely. */
   def sn1SnapshotHourly(s: SparkSession, d: String): DataFrame = {
-    val snap = s.read.parquet(graft.sources.WideSnapshot.ensure(s, d))
+    val snap = Tables.parquet(s, graft.sources.WideSnapshot.ensure(s, d))
     def micro(c: Column): Column = sum(floor(c * lit(1000000.0) + lit(0.5)))
     snap
       .where(col("ts") < SnapshotTsCut)
@@ -2681,7 +2681,7 @@ object Queries {
     * IEEE-identical column arithmetic (a-b, (a+b)·0.5 reproduce exactly in
     * the oracle). */
   def sn2BookShape(s: SparkSession, d: String): DataFrame = {
-    val snap = s.read.parquet(graft.sources.WideSnapshot.ensure(s, d))
+    val snap = Tables.parquet(s, graft.sources.WideSnapshot.ensure(s, d))
     def micro(c: Column): Column = sum(floor(c * lit(1000000.0) + lit(0.5)))
     snap
       .where(col("ts") < SnapshotTsCut)

@@ -1,9 +1,15 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructField
 import org.apache.spark.storage.StorageLevel
 
 /** Idempotent keyed sinks emulating the reference's two stores on plain
@@ -19,9 +25,14 @@ import org.apache.spark.storage.StorageLevel
   *  - [[append]] — plain Stream-Load append with the reference's
   *    empty-batch skip (K3, `doris/__init__.py:170-171`).
   *
-  * Scale notes: the merge unions touched-partition rows + updates and dedupes
-  * by key — one shuffle sized by the TOUCHED partitions, not the table. With
-  * a `partitionCol`, only partitions present in the update batch are read,
+  * Scale notes: a keyed upsert is four Spark jobs — one pass over the
+  * update for emptiness and its touched partitions, the broadcast of its
+  * keys, the shuffle that ranks the update's own rows, and the write. The
+  * stored rows of the touched partitions are read with the update's schema
+  * (no inference job; one footer is checked against it first), lose the
+  * update's keys in a null-safe anti-join, and are written from the splits
+  * they were read in: the only shuffle is the update's. With a
+  * `partitionCol`, only partitions present in the update batch are read,
   * merged, written (to a temp dir) and swapped in dir-by-dir; untouched
   * partition directories are never read or rewritten, so a 100 TB table with
   * daily partitions pays for the touched days, not the table. Writes always
@@ -117,24 +128,28 @@ object UpsertSink {
     if (hadOld) fs.delete(aside, true)
   }
 
-  /** Swap ONLY the partition dirs present under `tmp` into `path`, leaving
-    * every other partition dir untouched (same files, same bytes). Displaced
-    * partition dirs go aside first so [[recoverCrash]] can reconcile a crash
-    * mid-loop. */
+  /** Swap ONLY the partition dirs present under `tmp` into `path`, and drop
+    * the `replaced` dirs the merge left no row in (an update moved every
+    * key to another partition), leaving every other partition dir untouched
+    * (same files, same bytes). Displaced partition dirs go aside first so [[recoverCrash]] can
+    * reconcile a crash mid-loop. */
   private def swapPartitions(spark: SparkSession, tmp: String, path: String,
-      suffix: String): Unit = {
+      suffix: String, replaced: Seq[Path]): Unit = {
     val fs = fsFor(spark, path)
     val dstRoot = new Path(path)
     val aside = new Path(path + ".old-" + suffix)
     val parts = fs.listStatus(new Path(tmp))
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-    if (parts.nonEmpty) fs.mkdirs(aside)
+    val written = parts.map(_.getPath.getName).toSet
+    val emptied = replaced.filterNot(p => written(p.getName))
+    if (parts.nonEmpty || emptied.nonEmpty) fs.mkdirs(aside)
     parts.foreach { st =>
       val dst = new Path(dstRoot, st.getPath.getName)
       if (fs.exists(dst)) fs.rename(dst, new Path(aside, st.getPath.getName))
       fs.rename(st.getPath, dst)
     }
-    if (parts.nonEmpty) fs.delete(aside, true)
+    emptied.foreach(p => fs.rename(p, new Path(aside, p.getName)))
+    if (parts.nonEmpty || emptied.nonEmpty) fs.delete(aside, true)
     fs.delete(new Path(tmp), true) // leftovers: _SUCCESS marker
   }
 
@@ -189,13 +204,11 @@ object UpsertSink {
   private def mergeInto(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], versionCol: String,
       partitionCol: Option[String]): Unit = {
-    def touchedBy(c: String): Seq[Any] =
-      updates.select(c).distinct().collect().map(_.get(0)).toSeq
-    // emptiness and the touched partition values in one job, by the column
+    // emptiness and the touched partition dirs in one job, by the column
     // the table is laid out on; a crashed swap that hides the table's
     // layout until recovery gets a second probe below
     val probed = partitionCol.orElse(storedColumn(rootListing(spark, path)))
-      .filter(updates.columns.contains).map(c => c -> touchedBy(c))
+      .filter(updates.columns.contains).map(c => c -> touchedDirs(updates, c))
     if (probed.fold(updates.isEmpty)(_._2.isEmpty)) return
     recoverCrash(spark, path)
     val root = rootListing(spark, path)
@@ -210,32 +223,52 @@ object UpsertSink {
         s"the table's is ${storedCol.getOrElse("none")}")
     storedCol.foreach(c => require(updates.columns.contains(c),
       s"upsert into $path: the update lacks partition column $c"))
-    val stored = spark.read.parquet(path)
-    val cols = updates.columns
-    def merge(oldPart: DataFrame): DataFrame = {
-      val merged = oldPart.select(cols.map(col): _*)
-        .withColumn("_pri", lit(0))
-        .unionByName(updates.withColumn("_pri", lit(1)))
-      val w = Window.partitionBy(keys.map(col): _*)
-        .orderBy(col("_pri").desc, col(versionCol).desc)
-      merged
-        .withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .drop("_pri", "_rn")
+    // the stored rows this upsert rewrites: the touched partition dirs
+    // that exist (a NULL value lives in the Hive default-partition dir), or
+    // the whole flat table
+    val touched = storedCol.map(c => probed.collect { case (`c`, ds) => ds }
+      .getOrElse(touchedDirs(updates, c)))
+    val partDirs = root.filter(st => st.isDirectory &&
+      st.getPath.getName.contains("=")).map(_.getPath)
+    val replaced = touched.fold(Seq.empty[Path])(ds =>
+      partDirs.filter(p => ds.contains(p.getName)))
+    val fs = fsFor(spark, path)
+    def dataFiles(dir: Path): Seq[FileStatus] = fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+    requireStoredColumns(spark, path,
+      updates.schema.filterNot(f => storedCol.contains(f.name)),
+      (replaced ++ partDirs :+ new Path(path)).iterator.flatMap(dataFiles))
+    val cols = updates.columns.map(col)
+    // within the update, the highest version of each key wins
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(versionCol).desc)
+    val winners = updates.withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1).drop("_rn")
+    // The sink holds one row per key, so a stored row survives iff the
+    // update lacks its key: a null-safe anti-join against the update's keys
+    // (broadcast by the planner while they fit its threshold, as a
+    // micro-batch's do) keeps the stored rows in the splits they were read
+    // in, with no shuffle. The declared schema reads without inferring it.
+    val reader = spark.read.schema(updates.schema).option("basePath", path)
+    val stored = storedCol match {
+      case Some(_) if replaced.isEmpty => None
+      case Some(_) => Some(reader.parquet(replaced.map(_.toString): _*))
+      case None => Some(reader.parquet(path))
+    }
+    val merged = stored.fold(winners) { s =>
+      val u = updates.select(keys.map(k => col(k).as(s"_u_$k")): _*)
+      val kept = s.join(u,
+        keys.map(k => s(k) <=> col(s"_u_$k")).reduce(_ && _), "left_anti")
+      // as many output partitions as stored splits, up to the shuffle
+      // partitions the window merge wrote: the rewrite keeps its
+      // parallelism, and a partition dir never holds more files than that
+      kept.select(cols: _*).unionByName(winners).coalesce(
+        s.rdd.getNumPartitions.min(SQLConf.get.numShufflePartitions).max(1))
     }
     storedCol match {
       case Some(c) =>
         // read + merge + rewrite ONLY the touched partitions; everything
         // else stays on disk untouched (no read, no shuffle, no rewrite).
-        // The touched values prune the listing as literals; a NULL value
-        // lives in the Hive default-partition dir, whose swap would
-        // otherwise drop the stored rows an `isin` fails to pull in.
-        val (nulls, values) = probed.collect { case (`c`, vs) => vs }
-          .getOrElse(touchedBy(c)).partition(_ == null)
-        val storedType = stored.schema(c).dataType
-        val hit = col(c).isin(values.map(v => lit(v).cast(storedType)): _*)
-        val merged = merge(stored.where(
-          if (nulls.isEmpty) hit else hit || col(c).isNull))
         val suffix = java.util.UUID.randomUUID().toString.take(8)
         val tmp = path + ".tmp-" + suffix
         // cluster rows by key within each written file: parquet row-group
@@ -244,11 +277,42 @@ object UpsertSink {
         val clustered = merged.sortWithinPartitions((col(c) +: keys.map(col)): _*)
         // the tmp write is the action that reads `path`; renames happen after
         clustered.write.mode(SaveMode.Overwrite).partitionBy(c).parquet(tmp)
-        swapPartitions(spark, tmp, path, suffix)
+        swapPartitions(spark, tmp, path, suffix, replaced)
       case None =>
-        swapWrite(spark, merge(stored), path, None)
+        swapWrite(spark, merged, path, None)
     }
   }
+
+  /** The partition dir names (`c=value`, Hive default dir for NULL) the
+    * rows of `updates` fall in, in one job with no shuffle: each task
+    * returns its own set. Empty iff `updates` is. */
+  private def touchedDirs(updates: DataFrame, c: String): Seq[String] =
+    updates.select(col(c).cast("string")).rdd
+      .mapPartitions(_.map(_.getString(0)).toSet.iterator)
+      .collect().distinct
+      .map(ExternalCatalogUtils.getPartitionPathString(c, _)).toSeq
+
+  /** Fail unless the first of the stored data `files` has every column of
+    * `data` with the same type. The merge reads the stored rows with the
+    * update's schema, and a declared schema would null-fill a missing
+    * column in silence. */
+  private def requireStoredColumns(spark: SparkSession, path: String,
+      data: Seq[StructField], files: Iterator[FileStatus]): Unit =
+    files.nextOption().foreach { st =>
+      val conf = SQLConf.get
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st,
+        spark.sparkContext.hadoopConfiguration))
+      val footer = try new ParquetToSparkSchemaConverter(conf)
+        .convert(reader.getFooter.getFileMetaData.getSchema)
+      finally reader.close()
+      data.foreach { f =>
+        val found = footer.find(s => conf.resolver(s.name, f.name))
+        require(found.exists(s => s.dataType.catalogString == f.dataType.catalogString),
+          s"upsert into $path: the update's ${f.name} ${f.dataType.catalogString} " +
+            found.fold("is missing from")(s =>
+              s"is ${s.dataType.catalogString} in") + s" stored file ${st.getPath}")
+      }
+    }
 
   /** Field-subset update (MySQL `ON DUPLICATE KEY UPDATE`): for existing
     * keys, only `updateCols` take the update's values — all other columns

@@ -29,6 +29,25 @@ class IntegrityAndMacroSpec extends SparkSpec {
     assert(st.size == 6)
   }
 
+  test("hourlyStatus one hour on runs the same generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // read from a file, as a read-back reads its sink: a local relation
+    // would be folded by the optimizer before any code is generated
+    val path = Files.createTempDirectory("status").toString + "/facts"
+    Seq(("A", T0 + 1), ("A", T0 + H + 2), ("B", T0 + 2 * H + 5))
+      .toDF("sym", "ts").write.parquet(path)
+    val facts = spark.read.parquet(path)
+    val keys = Seq("A", "B").toDF("sym")
+    def status(endMs: Long) = CheckIntegrity.hourlyStatus(facts, keys,
+      Seq("sym"), "ts", T0, endMs, expectedPerHour = 1)
+      .where($"status" === "OK").count()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(status(T0 + 2 * H) == 2)
+    val before = compiles
+    assert(status(T0 + 3 * H) == 3)
+    assert(compiles == before)
+  }
+
   test("repairFromArchive merges only deficient hours") {
     val sink = Files.createTempDirectory("integ").toString + "/facts"
     val facts = Seq(("A", T0 + 1, 1.0), ("A", T0 + 2, 2.0), ("A", T0 + 3, 3.0))

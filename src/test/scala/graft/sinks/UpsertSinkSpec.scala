@@ -1,11 +1,14 @@
 package graft.sinks
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class UpsertSinkSpec extends SparkSpec {
   import spark.implicits._
+  import UpsertSinkSpec.R
 
   private def tmp(): String =
     Files.createTempDirectory("upsert").toString + "/t"
@@ -171,6 +174,139 @@ class UpsertSinkSpec extends SparkSpec {
     assert(out.toList == List("BTC", "ETH", "SOL"))
   }
 
+  /** The window merge the sink used before its anti-join: stored rows of
+    * the touched days unioned with the update, one row per key, any update
+    * beating the stored row and the highest version winning in the batch. */
+  private def windowMerge(stored: DataFrame, updates: DataFrame,
+      keys: Seq[String], versionCol: String): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("_pri").desc, col(versionCol).desc)
+    stored.select(updates.columns.map(col): _*).withColumn("_pri", lit(0))
+      .unionByName(updates.withColumn("_pri", lit(1)))
+      .withColumn("_rn", row_number().over(w))
+      .where(col("_rn") === 1).drop("_pri", "_rn")
+  }
+
+  test("property: the anti-join merge = the window merge, untouched days byte-identical") {
+    import org.scalacheck.{Gen, Prop}
+    // keys (sym, ts) with NULL parts; days d1-d3 plus NULL, and d4 only in
+    // updates (a new day); v is the version, distinct within an update
+    val genRow = for {
+      sym <- Gen.frequency(4 -> Gen.oneOf("A", "B").map(Option(_)), 1 -> Gen.const(None))
+      ts <- Gen.frequency(4 -> Gen.choose(1L, 4L).map(Option(_)), 1 -> Gen.const(None))
+      close <- Gen.option(Gen.choose(0, 99).map(_.toDouble))
+      day <- Gen.frequency(3 -> Gen.oneOf("d1", "d2", "d3").map(Option(_)), 1 -> Gen.const(None))
+    } yield R(sym, ts, 0L, close, day)
+    def distinctKeys(rs: List[R]) = rs.groupBy(r => (r.sym, r.ts)).values.map(_.head).toList
+    val genCase = for {
+      stored <- Gen.nonEmptyListOf(genRow).map(distinctKeys)
+      fresh <- Gen.nonEmptyListOf(genRow)
+      newDay <- Gen.listOf(genRow.map(_.copy(day = Some("d4"))))
+      dups <- Gen.someOf(stored) // stored keys revised, some more than once
+    } yield (stored, (fresh ++ newDay ++ dups ++ dups.take(2)).zipWithIndex
+      .map { case (r, i) => r.copy(v = i.toLong, close = Some(i.toDouble)) })
+    val cols = Seq("sym", "ts", "v", "close", "day")
+    def rows(df: DataFrame) = df.select(cols.map(col): _*).as[R].collect()
+      .toList.sortBy(r => (r.sym, r.ts, r.day, r.v))
+    val params = org.scalacheck.Test.Parameters.default
+      .withMinSuccessfulTests(12)
+      .withInitialSeed(org.scalacheck.rng.Seed(11L))
+    val res = org.scalacheck.Test.check(params, Prop.forAll(genCase) {
+      case (stored, update) =>
+        val path = tmp()
+        UpsertSink.upsert(spark, path, stored.toDF(cols: _*), Seq("sym", "ts"),
+          "v", Some("day"))
+        val before = rows(spark.read.parquet(path))
+        val dirs = fsOf(path).listStatus(new org.apache.hadoop.fs.Path(path))
+          .filter(_.isDirectory).map(_.getPath.getName).toList
+        val touchedDays = update.map(_.day).toSet
+        def dirOf(d: Option[String]) = s"day=${d.getOrElse("__HIVE_DEFAULT_PARTITION__")}"
+        val untouched = dirs.filterNot(d => touchedDays.map(dirOf).contains(d))
+        val filesBefore = untouched.map(partFiles(path, _))
+        Thread.sleep(5) // mtime resolution guard
+        val upd = update.toDF(cols: _*)
+        UpsertSink.upsert(spark, path, upd, Seq("sym", "ts"), "v", Some("day"))
+        val (hit, kept) = before.partition(r => touchedDays(r.day))
+        val want = kept ++ rows(windowMerge(hit.toDF(cols: _*), upd,
+          Seq("sym", "ts"), "v"))
+        val got = rows(spark.read.parquet(path))
+        Prop(got == want.sortBy(r => (r.sym, r.ts, r.day, r.v))) :|
+          s"got $got want $want" &&
+          Prop(untouched.map(partFiles(path, _)) == filesBefore) :| "untouched"
+    })
+    assert(res.passed, res.status.toString)
+  }
+
+  test("a stored file lacking a declared column fails the upsert before it writes") {
+    val path = tmp()
+    UpsertSink.upsert(spark, path, Seq(("BTC", 1L, 1.0, "2024-01-01"),
+      ("BTC", 2L, 2.0, "2024-01-02")).toDF("symbol", "ts", "close", "dt_date"),
+      Seq("symbol", "ts"), "ts", Some("dt_date"))
+    // the touched day's only file has no `close`; the other day keeps it
+    val day = path + "/dt_date=2024-01-01"
+    fsOf(path).delete(new org.apache.hadoop.fs.Path(day), true)
+    Seq(("BTC", 1L)).toDF("symbol", "ts").coalesce(1).write.parquet(day)
+    val before = partFiles(path, "dt_date=2024-01-01")
+    val e = intercept[IllegalArgumentException](UpsertSink.upsert(spark, path,
+      Seq(("BTC", 1L, 11.0, "2024-01-01")).toDF("symbol", "ts", "close", "dt_date"),
+      Seq("symbol", "ts"), "ts", Some("dt_date")))
+    assert(e.getMessage.contains("close"), e.getMessage)
+    assert(partFiles(path, "dt_date=2024-01-01") == before)
+    // a stored type the update does not share fails the same way
+    intercept[IllegalArgumentException](UpsertSink.upsert(spark, path,
+      Seq(("BTC", "1", 11.0, "2024-01-02")).toDF("symbol", "ts", "close", "dt_date"),
+      Seq("symbol", "ts"), "ts", Some("dt_date")))
+    assert(spark.read.parquet(path + "/dt_date=2024-01-02")
+      .select("ts", "close").as[(Long, Double)].collect().toList == List((2L, 2.0)))
+  }
+
+  test("20 upserts into a day leave its file count bounded") {
+    val path = tmp()
+    val seed = spark.range(0L, 2000L, 1L, 3)
+      .select(lit("BTC").as("symbol"), $"id".as("ts"), $"id".cast("double").as("close"),
+        when($"id" % 2 === 0, "2024-01-01").otherwise("2024-01-02").as("dt_date"))
+    UpsertSink.upsert(spark, path, seed, Seq("symbol", "ts"), "ts", Some("dt_date"))
+    def files(day: String) = partFiles(path, s"dt_date=$day")
+      .count(f => f._1.endsWith(".parquet"))
+    val bound = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    (1 to 20).foreach { i =>
+      // one revision and one new row in day 1, and on odd rounds in day 2
+      val days = if (i % 2 == 1) Seq("2024-01-01", "2024-01-02") else Seq("2024-01-01")
+      UpsertSink.upsert(spark, path, days.zipWithIndex.flatMap { case (d, j) =>
+        Seq(("BTC", (2 * i + j).toLong, -i.toDouble, d),
+          ("BTC", 10000L + 2 * i + j, -i.toDouble, d))
+      }.toDF("symbol", "ts", "close", "dt_date"),
+        Seq("symbol", "ts"), "ts", Some("dt_date"))
+      assert(files("2024-01-01") <= bound && files("2024-01-02") <= bound,
+        s"round $i: ${files("2024-01-01")}, ${files("2024-01-02")} files")
+    }
+    assert(spark.read.parquet(path).count() == 2000L + 30L)
+  }
+
+  test("a stream micro-batch upsert runs at most 4 Spark jobs") {
+    val base = Files.createTempDirectory("jobs")
+    val drop = base.resolve("drop"); Files.createDirectories(drop)
+    val sink = base.resolve("sink").toString
+    val day1 = 1704067200000L // 2024-01-01
+    def k(sym: String, ts: Long, close: Int) =
+      s"""$sym\t[[$ts,"1","2","0.5","$close","10",${ts + 59999},"15",7,"1","1","0"]]"""
+    // a two-day sink, then one batch revising day 1 and adding to day 2
+    Files.write(drop.resolve("a.txt"), (for {
+      s <- Seq("BTCUSDT", "ETHUSDT"); d <- 0 to 1; m <- 0 until 50
+    } yield k(s, day1 + d * 86400000L + m * 60000L, 1)).mkString("\n").getBytes)
+    graft.streaming.KlineStream.ingest(spark, drop.toString,
+      base.resolve("ckpt0").toString, sink, "binance", 1, 1, 60000L,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination(60000)
+    val drop2 = base.resolve("drop2"); Files.createDirectories(drop2)
+    Files.write(drop2.resolve("b.txt"), Seq(k("BTCUSDT", day1, 2),
+      k("ETHUSDT", day1 + 86400000L + 50 * 60000L, 2)).mkString("\n").getBytes)
+    val jobs = jobsOf(graft.streaming.KlineStream.ingest(spark, drop2.toString,
+      base.resolve("ckpt1").toString, sink, "binance", 1, 1, 60000L,
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination(60000))
+    assert(jobs <= 4, s"$jobs jobs")
+    assert(spark.read.parquet(sink).count() == 201L)
+  }
+
   test("crash recovery: leftover .old- table aside is restored, not orphaned") {
     val path = tmp()
     val v1 = Seq(("BTC", 1L, 1.0)).toDF("symbol", "ts", "close")
@@ -305,4 +441,10 @@ class UpsertSinkSpec extends SparkSpec {
     assert(out(0) == ("binance", "BTCUSDT", 1, "0.001", 3, 100L)) // kept 100
     assert(out(1) == ("binance", "NEWUSDT", 1, "0.1", 1, 555L))   // inserted whole
   }
+}
+
+object UpsertSinkSpec {
+  /** A row of the merge property's sink: key (sym, ts), version v. */
+  final case class R(sym: Option[String], ts: Option[Long], v: Long,
+      close: Option[Double], day: Option[String])
 }

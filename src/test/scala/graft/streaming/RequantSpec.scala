@@ -83,6 +83,27 @@ class RequantSpec extends SparkSpec {
       0.8f.toDouble * 0.8f.toDouble)) < 1e-12)
   }
 
+  test("a NULL-tagged index row survives the refresh and the rebuild") {
+    val base = Files.createTempDirectory("requantnull")
+    val idx = base.resolve("idx").toString
+    Similarity.writeVecIndex(Seq(0L -> Array(1.0f, 0.2f),
+        1L -> Array(1.0f, -0.2f)).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", idx, cents, tag = -1L, SaveMode.Overwrite)
+    // a copy of row 0 whose tag is NULL, in the same cell
+    spark.read.parquet(s"$idx/vecs").where($"id" === 0L)
+      .withColumn("id", org.apache.spark.sql.functions.lit(9L))
+      .withColumn("batch_id", org.apache.spark.sql.functions.lit(null).cast("long"))
+      .write.mode(SaveMode.Append).partitionBy("cell").parquet(s"$idx/vecs")
+    val got = Similarity.refreshQuantizer(spark, idx, cents, dim = 2)
+    // cell 0 averages all three rows: (1, 0.2), (1, -0.2), (1, 0.2)
+    assert(got(0)._2.toList == List(1.0, 0.066667))
+    val next = base.resolve("next").toString
+    Similarity.rebuildVecIndex(spark, idx, next, got)
+    val ids = spark.read.parquet(s"$next/vecs").select($"id", $"batch_id")
+      .as[(Long, Option[Long])].collect().sortBy(_._1).toList
+    assert(ids == List((0L, Some(-1L)), (1L, Some(-1L)), (9L, None)))
+  }
+
   test("an epoch-0 batch replayed BEFORE the refresh does not " +
       "double-weight the refreshed model, and the rebuild does not carry " +
       "the duplicate rows into the new epoch's index") {

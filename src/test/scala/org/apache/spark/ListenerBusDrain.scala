@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every event posted so far has reached the listeners, so a
+  * spec can read a `SparkListener`'s counts right after an action. The bus
+  * is package-private to Spark; this object lives in its package for that. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
